@@ -58,6 +58,11 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet may carry TIMESTAMP(NANOS), which Spark's reader
+      // rejects unless it reads it as a nanosecond-epoch long (Tables.df
+      // normalizes either generation to that). Set here, once, so query code
+      // never mutates session conf and cached schemas never depend on it.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
 

@@ -658,6 +658,11 @@ object Rollups {
       s"$name: the stored state was built for a different definition " +
         s"(manifest ${m.defSha.getOrElse("<none>")}) — rebuild with Rollups.build")
     val changedT = if (changed.isEmpty) d.base else changed
+    // the elided parent's rows never reach the state, so no delta of it can
+    // be merged; a changed parent needs the full FK check of a rebuild
+    require(!fkElisions.get(name).exists(_._3.equalsIgnoreCase(changedT)),
+      s"$changedT is the FK-elided parent of $name: a delta of it cannot be " +
+        "merged into the state — rebuild with Rollups.build")
     require(d.baseTables.exists(_.equalsIgnoreCase(changedT)),
       s"$changedT is not a base table of $name (${d.baseTables.mkString(", ")})")
     // transformed (anti-join) defs: a base-fact insert-delta is exact only
@@ -694,10 +699,15 @@ object Rollups {
           if (j.table2.equalsIgnoreCase(changedT)) delta
           else Tables.df(spark, dir, j.table2))
       }
-    // FK-elision guard on the delta: inserted child rows must keep the
-    // containment the elided spec join relies on (a violating delta is
-    // refused BEFORE any state is written)
-    fkElisions.get(name).foreach { case (ct, _, _, _) =>
+    // FK-elision guard: inserted child rows must keep the containment the
+    // elided spec join relies on (a violating delta is refused BEFORE any
+    // state is written). The new manifest pins the parent's CURRENT
+    // fingerprint, so a parent rewritten since the stored version was
+    // published gets the full check first — checking only the delta would
+    // re-approve a state whose existing child rows lost their parent.
+    fkElisions.get(name).foreach { case (ct, _, pt, _) =>
+      if (!m.bases.get(pt).contains(Fingerprints.of(s"$dir/$pt.parquet")))
+        checkFkElision(spark, dir, name)
       if (sign > 0 && ct.equalsIgnoreCase(changedT))
         checkFkElision(spark, dir, name, Some(delta))
     }
@@ -738,7 +748,7 @@ object Rollups {
             s"fingerprints moved (${m.bases} -> $current); recomputing from the fact. " +
             "Refresh the state with Rollups.refresh after base changes.")
           None
-        } else Some(spark.read.parquet(s"$root/v${m.version}"))
+        } else Some(Tables.parquet(spark, s"$root/v${m.version}"))
     }
   }
 

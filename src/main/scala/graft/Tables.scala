@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Named-table access over the driver's parquet fixtures (see TESTDATA.md).
   *
@@ -9,6 +10,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the scan is declarative, so Catalyst performs column pruning and predicate
   * pushdown into the parquet reader — the moral equivalent of the reference's
   * static column/chunk pruning lists.
+  *
+  * Like the reference's one-time table resolution, a parquet path's schema is
+  * resolved once, not per query: [[parquet]] / [[schemaOf]] keep a cache per
+  * `SparkSession` (weakly keyed, so a stopped session's entries go with it)
+  * from absolute path to (listing fingerprint, schema). A hit reads with
+  * `spark.read.schema(cached)`, which launches no Spark job; a miss runs the
+  * one schema-inference job. Invalidation rule: the entry is served only
+  * while [[Fingerprints.of]] of the path — every file's relative path, size
+  * and mtime — is unchanged, so a rewritten table is inferred afresh and a
+  * stale schema is never served. Inference depends on session conf fixed at
+  * build time ([[GraftSession.tuned]]), never on conf that query code sets.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -32,16 +44,39 @@ object Tables {
 
   def df(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.parquet has shipped with two physical types for `ts`:
-    // TIMESTAMP(NANOS) (rejected by Spark's reader unless read as a
-    // nanosecond-epoch long) and TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ).
-    // Queries are written against a single convention — nanosecond-epoch
-    // long, `ts DIV 1000` == DuckDB's `epoch_us(ts)` — so normalize here.
-    if (name == "events")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // TIMESTAMP(NANOS) (read as a nanosecond-epoch long under the session's
+    // `nanosAsLong`, see GraftSession.tuned) and TIMESTAMP(MICROS) (read as
+    // TIMESTAMP_NTZ). Queries are written against a single convention —
+    // nanosecond-epoch long, `ts DIV 1000` == DuckDB's `epoch_us(ts)` — so
+    // normalize here.
     val raw = bucketed(spark, dir, name)
-      .getOrElse(spark.read.parquet(s"$dir/$name.parquet"))
+      .getOrElse(parquet(spark, s"$dir/$name.parquet"))
     if (name == "events") normalizeEventTs(raw) else raw
   }
+
+  private type Resolved = java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]
+  private val schemas = new java.util.WeakHashMap[SparkSession, Resolved]()
+
+  /** The schema of the parquet data at `path`, inferred at most once per
+    * session and listing fingerprint (see the object doc). */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val abs = java.nio.file.Paths.get(path).toAbsolutePath.normalize.toString
+    val fp = Fingerprints.of(abs)
+    val known = schemas.synchronized(schemas.computeIfAbsent(spark, _ => new Resolved))
+    Option(known.get(abs)) match {
+      case Some((`fp`, schema)) => schema
+      case _ =>
+        val schema = spark.read.parquet(path).schema
+        // a path the local file system cannot list has no fingerprint to
+        // invalidate on, so it is never cached
+        if (fp != "missing") known.put(abs, (fp, schema))
+        schema
+    }
+  }
+
+  /** `spark.read.parquet(path)` without the per-call schema-inference job. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
 
   /** Bucketed-layout hook: a dataset dir built by [[ScaleUpLayout]] carries
     * `_layout/<table>.sql` — an idempotent DDL script registering the

@@ -162,6 +162,7 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(_._1.startsWith(prefix))
       .map { case (k, v) => s"${q(k)}: ${q(canonOracle(v, schemas.get(k)))}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    println(s"[verify] ${operators.CorpusQueries.notRun} corpus entries not run")
     spark.stop()
   }
 }

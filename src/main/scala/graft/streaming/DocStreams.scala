@@ -18,7 +18,7 @@ object DocStreams {
   /** Streaming source over the documents parquet (same staging pattern as
     * EventStreams.source: watch a directory, stage a single-file fixture). */
   def source(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/documents.parquet")
     val streamDir =
       if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "documents.parquet"))) {
         s"$dir/documents.parquet"

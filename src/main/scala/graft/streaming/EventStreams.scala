@@ -24,8 +24,7 @@ object EventStreams {
   /** Streaming source over the events parquet directory (schema must be given
     * explicitly — streaming readers don't infer). */
   def source(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, s"$dir/events.parquet")
     // The file-stream source wants a directory to watch; a production deploy
     // points this at the landing directory. A single-file fixture is staged
     // through a temp dir so the same code path is exercised.

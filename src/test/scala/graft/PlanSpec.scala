@@ -345,39 +345,29 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("tpcds q14: flat path plans lazily — constructing it runs NO Spark job") {
-    // r16: without a layout the raw shape is one lazy plan; the r15 flat
-    // path ran a full fact⋈part aggregation EAGERLY inside a `.head`
-    // flag-domain guard before the query executed the same aggregation
-    // again (guide §5 "no driver actions in query paths"). The guard now
-    // only ever reads a persisted state (RollupSpec covers that branch).
-    // construction-time jobs that are NOT the guard: spark.read.parquet
-    // runs footer/schema-inference jobs per table read — baseline them with
-    // a known-lazy body over the SAME two tables (lineitem ⋈ part)
-    def jobsDuring(f: => Unit): Int = {
-      @volatile var jobs = 0
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs += 1
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try { f; Thread.sleep(500) } // listener events post asynchronously
-      finally spark.sparkContext.removeSparkListener(listener)
-      jobs
-    }
-    val lazyBaseline = jobsDuring {
-      SparkEntry.queries("tpch_q19_disjunction")(spark, sf)
-    }
-    var df: org.apache.spark.sql.DataFrame = null
-    val q14Jobs = jobsDuring {
-      df = SparkEntry.queries("tpcds_q14_cross_channel")(spark, sf)
-    }
-    assert(q14Jobs <= lazyBaseline,
-      s"building the flat q14 plan ran $q14Jobs jobs vs $lazyBaseline for a " +
-        "lazy body over the same tables — a driver action is back in the query path")
-    val p = df.queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct"),
-      s"never a cartesian (the 1-row totals attach via broadcast):\n$p")
+  test("construction sweep: once its tables are resolved, building a headline query runs NO Spark job") {
+    // Query bodies must only build plans, with no Spark action on the
+    // driver; the r15 q14 flat path, for one, ran a full fact⋈part
+    // aggregation inside a `.head` guard. Each table's schema is resolved
+    // once per session (Tables.schemaOf), so after one read of every table
+    // construction is free.
+    val eager = Map(
+      // its connected-components loop (ccLabels) runs while the query is
+      // built; making it a lazy plan is ROADMAP item 3
+      "cur_dedup_cluster" -> "eager connected-components label propagation")
+    Tables.names.foreach(t => Tables.df(spark, sf, t))
+    val jobs = (SparkEntry.benchNames :+ "tpcds_q14_cross_channel").map { n =>
+      n -> SparkTestBase.jobsDuring(SparkEntry.queries(n)(spark, sf))
+    }.toMap
+    val offenders = jobs.filter { case (n, j) => j > 0 && !eager.contains(n) }
+    assert(offenders.isEmpty, s"construction launched Spark jobs: $offenders")
+    eager.foreach { case (n, why) => assert(jobs(n) > 0,
+      s"$n builds lazily now — drop it from the allowlist ($why)") }
+  }
+
+  test("tpcds q14: never a cartesian (the 1-row totals attach via broadcast)") {
+    val p = planOf("tpcds_q14_cross_channel")
+    assert(!p.contains("CartesianProduct"), p)
   }
 
   test("tpcds q23: both CTE filters reach the fact as semi joins") {

@@ -476,4 +476,37 @@ class RollupSpec extends AnyFunSuite {
     assert(Rollups.visibleDf(spark, d, Rollups.QtyDecByOrder).isEmpty,
       "a parent rewrite after build must refuse the state, not serve it silently")
   }
+
+  test("FK-elision refresh: a parent rewrite that breaks the FK is caught by a valid child delta's refresh") {
+    val d = copyDir("lineitem", "orders", "customer")
+    Rollups.build(spark, d, Rollups.QtyDecByOrder)
+    // out of band: drop a customer that existing orders reference
+    val orders = Tables.df(spark, d, "orders")
+    val dropped = orders.agg(min(col("o_custkey"))).head.getLong(0)
+    val kept = spark.read.parquet(s"$d/customer.parquet").filter(col("c_custkey") =!= dropped).cache()
+    kept.count()
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$d/customer.parquet"))
+    kept.coalesce(1).write.parquet(s"$d/customer.parquet")
+    kept.unpersist()
+    // the delta itself is FK-clean: a new order of a surviving customer
+    val maxKey = orders.agg(max(col("o_orderkey"))).head.getLong(0)
+    val delta = orders.filter(col("o_custkey") =!= dropped).limit(1)
+      .withColumn("o_orderkey", lit(maxKey + 1L))
+    val e = intercept[IllegalArgumentException] {
+      Rollups.refresh(spark, d, Rollups.QtyDecByOrder, delta, changed = "orders")
+    }
+    assert(e.getMessage.contains("FK elision violated"))
+    assert(Rollups.visibleDf(spark, d, Rollups.QtyDecByOrder).isEmpty,
+      "the refused refresh must not re-pin the rewritten parent")
+  }
+
+  test("FK-elision refresh: naming the ELIDED parent as the changed table is rejected") {
+    val d = copyDir("lineitem", "orders", "customer")
+    Rollups.build(spark, d, Rollups.QtyDecByOrder)
+    val e = intercept[IllegalArgumentException] {
+      Rollups.refresh(spark, d, Rollups.QtyDecByOrder,
+        Tables.df(spark, d, "customer").limit(1), changed = "customer")
+    }
+    assert(e.getMessage.contains("FK-elided parent"))
+  }
 }

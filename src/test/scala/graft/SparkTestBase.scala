@@ -7,4 +7,21 @@ import org.apache.spark.sql.SparkSession
 object SparkTestBase {
   lazy val spark: SparkSession = GraftSession.create("local[4]", shufflePartitions = 4)
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `f` runs. The listener bus is drained before
+    * the listener is attached and again before it is read, so the count
+    * holds exactly the jobs `f` launched. */
+  def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { f; org.apache.spark.TestBus.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    jobs.get
+  }
 }

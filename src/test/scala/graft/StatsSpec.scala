@@ -127,8 +127,7 @@ class StatsSpec extends AnyFunSuite {
 
   test("JOB 28-class double snowflake: CBO must not start from the m:n hub fan-out") {
     setup()
-    // second fact spine: events needs catalog stats too (nanos ts reads as long)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // second fact spine: events needs catalog stats too
     Stats.register(spark, SparkTestBase.sf, Seq("events"))
     // the declared order fans lineitem × events out through the customer hub
     // before any selective dim shrinks either side; with exact stats the

@@ -39,4 +39,40 @@ class TablesSpec extends AnyFunSuite {
     assert(norm.schema("ts").dataType == LongType)
     assert(norm.select("ts").as[Long].head() == 1700000000000000000L)
   }
+
+  // ---- the parquet resolver: one schema inference per session and listing
+
+  test("resolved schemas equal the inferred ones for every fixture table; events.ts stays a long") {
+    Tables.names.foreach { t =>
+      val path = s"${SparkTestBase.sf}/$t.parquet"
+      Tables.df(spark, SparkTestBase.sf, t)
+      assert(Tables.schemaOf(spark, path) == spark.read.parquet(path).schema, t)
+    }
+    assert(Tables.df(spark, SparkTestBase.sf, "events").schema("ts").dataType == LongType)
+  }
+
+  test("a second Tables.df on an unchanged table runs no Spark job") {
+    Tables.df(spark, SparkTestBase.sf, "lineitem")
+    assert(SparkTestBase.jobsDuring(Tables.df(spark, SparkTestBase.sf, "lineitem")) == 0)
+  }
+
+  test("a table rewritten in place is re-resolved: new schema, new rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    val before = Tables.df(spark, dir, "t")
+    assert(before.columns.toSeq == Seq("k", "v"))
+    assert(before.as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+    Seq((2L, 3.5, true)).toDF("k", "x", "flag").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val after = Tables.df(spark, dir, "t")
+    assert(after.columns.toSeq == Seq("k", "x", "flag"))
+    assert(after.as[(Long, Double, Boolean)].collect().toSeq == Seq((2L, 3.5, true)))
+  }
+
+  test("two sessions never share resolved schemas") {
+    Tables.df(spark, SparkTestBase.sf, "nation")
+    val other = spark.newSession()
+    assert(SparkTestBase.jobsDuring(Tables.df(other, SparkTestBase.sf, "nation")) > 0,
+      "a second session must infer the schema itself, not reuse the first one's")
+    assert(SparkTestBase.jobsDuring(Tables.df(other, SparkTestBase.sf, "nation")) == 0)
+  }
 }
