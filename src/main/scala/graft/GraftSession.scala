@@ -40,8 +40,7 @@ object GraftSession {
       // is exactly the config you'd ship: initial count ≫ cores, AQE sizes
       // the real parallelism per stage from map output statistics.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (shufflePartitions *
-          sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS_MULT", "32").toInt).toString)
+        (shufflePartitions * 32).toString)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.cbo.enabled", "true")
       .config("spark.sql.cbo.joinReorder.enabled", "true")

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** One-pass fixture → PRODUCTION-LAYOUT scale-up: [[ScaleUp]]'s key-offset
-  * replication fused with [[BenchLayout]]'s hive-partitioned multi-file write,
-  * so decade-scale datasets (SF100 ≈ 100 GB from the sf0.1 fixture at
+  * replication fused with [[Bench.layout]]'s hive-partitioned multi-file
+  * write, so decade-scale datasets (SF100 ≈ 100 GB from the sf0.1 fixture at
   * factor 1000) materialize WITHOUT an intermediate flat copy — at these
   * sizes the flat+relayout route would double disk and add a full
   * read/write cycle.

@@ -50,9 +50,7 @@ class RollupFromBase(spark: SparkSession) extends Rule[LogicalPlan] {
   private val GroupingIdName = "spark_grouping_id"
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (spark.sessionState.conf
-          .getConfString("spark.graft.rollupFromBase", "true") != "true" ||
-        sys.env.get("SPARK_GRAFT_NO_RFB").contains("1")) plan // bench A/B switch
+    if (spark.sessionState.conf.getConfString("spark.graft.rollupFromBase", "true") != "true") plan
     else plan.transformUp { case a: Aggregate => tryRewrite(a).getOrElse(a) }
 
   private def associative(ae: AggregateExpression, base: LogicalPlan): Boolean =

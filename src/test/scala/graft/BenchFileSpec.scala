@@ -1,17 +1,17 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-/** File-based benchmark runner (reference: file_based_benchmark.cpp): every
+/** File-based benchmark suite (reference: file_based_benchmark.cpp): every
   * .sql file in the shipped bench_queries/ dir — plain SELECTs, window
   * queries and a multi-statement transaction script — must run green through
   * the Pipeline and report a positive wall time. */
 class BenchFileSpec extends AnyFunSuite {
-  private lazy val spark = SparkTestBase.spark
-
   test("shipped bench_queries items all run and time") {
-    val times = BenchFile.runAll(spark, "bench_queries", SparkTestBase.sf)
-    assert(times.keySet === Set("revenue_by_nation", "top_orders_window", "txn_update_script"))
-    assert(times.values.forall(_ > 0.0))
+    val queries = BenchSuitesSpec.fileReport.get("queries")
+    assert(queries.fieldNames.asScala.toSet ===
+      Set("revenue_by_nation", "top_orders_window", "txn_update_script"))
+    assert(queries.elements.asScala.forall(_.asDouble > 0.0))
   }
 }

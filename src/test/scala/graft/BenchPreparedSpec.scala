@@ -2,36 +2,23 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Prepared-statement bench mode (reference: tpch_benchmark.cpp:57
+/** Prepared-statement bench suite (reference: tpch_benchmark.cpp:57
   * `--use_prepared_statements`): every headline template PREPAREs, every
   * binding EXECUTEs to the same rows as the literal-inlined SQL on a raw
   * session, and re-execution is served from the GDFS plan cache. */
 class BenchPreparedSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
-  private def freshPipeline(): Pipeline = {
-    val cat = new Catalog(spark)
-    Tables.names.foreach(n => cat.register(n, Tables.df(spark, SparkTestBase.sf, n)))
-    new Pipeline(cat)
-  }
-
   test("every item prepares and every EXECUTE matches direct SQL") {
-    val p = freshPipeline()
-    BenchPrepared.items.foreach { case (name, tpl, bindings) =>
-      assert(p.run(s"PREPARE $name AS ${tpl.replaceAll("\\s+", " ")}").head.status == p.Ok)
-      bindings.foreach { b =>
-        val r = p.run(s"EXECUTE $name (${b.mkString(", ")})").head
-        assert(r.status == p.Ok, s"$name $b")
-        val prep = r.df.get.collect().map(_.toString).sorted.toSeq
-        val direct = spark.sql(BenchPrepared.bind(tpl, b)).collect().map(_.toString).sorted.toSeq
-        assert(prep === direct, s"$name $b")
-      }
-    }
+    val report = BenchSuitesSpec.preparedReport
+    val bindings = Bench.preparedItems.map(_._3.size).sum
+    assert(report.get("comparisons").asInt === bindings)
+    assert(report.get("results_match").asInt === bindings)
   }
 
   test("re-binding the same parameters is a plan-cache hit, new parameters a miss") {
-    val p = freshPipeline()
-    val (name, tpl, bindings) = BenchPrepared.items.head
+    val p = Bench.fixturePipeline(spark, SparkTestBase.sf)
+    val (name, tpl, bindings) = Bench.preparedItems.head
     p.run(s"PREPARE $name AS ${tpl.replaceAll("\\s+", " ")}")
     val exec0 = s"EXECUTE $name (${bindings(0).mkString(", ")})"
     p.run(exec0)

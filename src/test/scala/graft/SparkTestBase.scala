@@ -24,4 +24,14 @@ object SparkTestBase {
     finally sc.removeSparkListener(listener)
     jobs.get
   }
+
+  /** The JSON report a [[Bench]] suite body returns, which must be its only
+    * output: nothing else on stdout and exactly one line. */
+  def jsonLine(run: => String): com.fasterxml.jackson.databind.JsonNode = {
+    val out = new java.io.ByteArrayOutputStream
+    val line = scala.Console.withOut(out)(run)
+    assert(out.size == 0, s"printed besides the JSON line: $out")
+    assert(!line.contains('\n'), s"not one line: $line")
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+  }
 }

@@ -1,24 +1,22 @@
 package graft.operators
 
-import graft.{SparkTestBase, Tables}
+import graft.{Bench, Q, SparkTestBase}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The q5/q7/q8 semi-join pre-reduction (reference:
   * src/lib/optimizer/strategy/semi_join_reduction_rule.cpp) is a pure plan
   * rewrite — these tests pin the semantics by comparing each rewritten query
-  * against the naive join order it replaced, row for row. The DuckDB oracle
+  * against the naive join order it replaced ([[Bench.semiReduceNaive]], the
+  * `semi-reduce` suite's counterfactual), row for row. The DuckDB oracle
   * gates the same queries at sf0.01; this spec keeps the equivalence local
   * and fast so a future re-ordering can't silently change results.
   */
 class SemiJoinReductionSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val sf = SparkTestBase.sf
-  import graft.Det._
 
-  private def t(n: String): DataFrame = Tables.df(spark, sf, n)
-  private val net = dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))
+  private def naive(q: Q): DataFrame = Bench.semiReduceNaive(q.name)(spark, sf)
 
   private def assertSameRows(name: String, got: DataFrame, want: DataFrame): Unit = {
     val g = got.collect().map(_.toSeq).sortBy(_.mkString("|"))
@@ -28,129 +26,36 @@ class SemiJoinReductionSpec extends AnyFunSuite {
   }
 
   test("q5: pre-reduced plan matches the naive join order") {
-    val c = t("customer")
-    val o = t("orders")
-      .filter(col("o_orderdate") >= "1996-01-01 00:00:00" && col("o_orderdate") < "1998-01-01 00:00:00")
-    val l = t("lineitem")
-    val sup = t("supplier")
-    val n = t("nation")
-    val r = t("region").filter(col("r_name") === "ASIA")
-    val naive = l.join(o, l("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .join(broadcast(sup), l("l_suppkey") === sup("s_suppkey") && c("c_nationkey") === sup("s_nationkey"))
-      .join(broadcast(n), sup("s_nationkey") === n("n_nationkey"))
-      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-      .groupBy("n_name")
-      .agg(asDouble(sum(net)).as("revenue"))
-      .orderBy(col("revenue").desc, col("n_name"))
     val reduced = TpchQueries.q5LocalSupplier.run(spark, sf)
     assert(reduced.count() > 0, "q5 must be non-vacuous at sf0.001")
-    assertSameRows("q5", reduced, naive)
+    assertSameRows("q5", reduced, naive(TpchQueries.q5LocalSupplier))
   }
 
   test("q7: pre-reduced plan matches the naive join order") {
-    val n1 = t("nation").select(col("n_nationkey").as("n1_key"), col("n_name").as("supp_nation"))
-    val n2 = t("nation").select(col("n_nationkey").as("n2_key"), col("n_name").as("cust_nation"))
-    val l = t("lineitem")
-      .filter(col("l_shipdate") >= "1996-01-01 00:00:00" && col("l_shipdate") < "1998-01-01 00:00:00")
-    val naive = l.join(t("orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(t("customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t("supplier")), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(n1), col("s_nationkey") === col("n1_key"))
-      .join(broadcast(n2), col("c_nationkey") === col("n2_key"))
-      .filter((col("supp_nation") === "NATION_1" && col("cust_nation") === "NATION_2")
-        || (col("supp_nation") === "NATION_2" && col("cust_nation") === "NATION_1"))
-      .groupBy(col("supp_nation"), col("cust_nation"), year(col("l_shipdate")).as("l_year"))
-      .agg(asDouble(sum(net)).as("revenue"))
-      .orderBy("supp_nation", "cust_nation", "l_year")
     val reduced = TpchFullQueries.q7VolumeShipping.run(spark, sf)
-    assertSameRows("q7", reduced, naive)
+    assertSameRows("q7", reduced, naive(TpchFullQueries.q7VolumeShipping))
   }
 
   test("q8: pre-reduced plan matches the naive join order") {
-    val p = t("part").filter(col("p_type") === "STANDARD")
-    val n1 = t("nation").select(col("n_nationkey").as("n1_key"), col("n_regionkey").as("n1_region"))
-    val n2 = t("nation").select(col("n_nationkey").as("n2_key"), col("n_name").as("nation"))
-    val r = t("region").filter(col("r_name") === "ASIA")
-    val o = t("orders")
-      .filter(col("o_orderdate") >= "1996-01-01 00:00:00" && col("o_orderdate") < "1998-01-01 00:00:00")
-    val naive = t("lineitem")
-      .join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(t("customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(t("supplier")), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(n1), col("c_nationkey") === col("n1_key"))
-      .join(broadcast(r), col("n1_region") === col("r_regionkey"))
-      .join(broadcast(n2), col("s_nationkey") === col("n2_key"))
-      .select(year(col("o_orderdate")).as("o_year"), net.as("volume"), col("nation"))
-      .groupBy("o_year")
-      .agg((asDouble(sum(when(col("nation") === "NATION_5", col("volume"))
-          .otherwise(lit(0).cast("decimal(28,4)"))))
-        / asDouble(sum(col("volume")))).as("mkt_share"))
-      .orderBy("o_year")
     val reduced = TpchFullQueries.q8MarketShare.run(spark, sf)
     assert(reduced.count() > 0, "q8 must be non-vacuous at sf0.001")
-    assertSameRows("q8", reduced, naive)
+    assertSameRows("q8", reduced, naive(TpchFullQueries.q8MarketShare))
   }
 
   test("q9: part-filter-first plan matches the naive orders-first join order") {
-    val p = t("part").filter(col("p_name").like("%blue%"))
-    val amount = net -
-      lit(0.1).cast("decimal(2,1)") * dec(col("p_retailprice")) * dec(col("l_quantity"))
-    val naive = t("lineitem")
-      .join(t("orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(t("supplier")), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t("nation")), col("s_nationkey") === col("n_nationkey"))
-      .select(col("n_name").as("nation"), year(col("o_orderdate")).as("o_year"), amount.as("amount"))
-      .groupBy("nation", "o_year")
-      .agg(asDouble(sum(col("amount"))).as("sum_profit"))
-      .orderBy(col("nation"), col("o_year").desc)
     val reduced = TpchFullQueries.q9ProductProfit.run(spark, sf)
     assert(reduced.count() > 0, "q9 must be non-vacuous at sf0.001")
-    assertSameRows("q9", reduced, naive)
+    assertSameRows("q9", reduced, naive(TpchFullQueries.q9ProductProfit))
   }
 
   test("q17: semi-reduced per-part average matches the full-fact aggregate") {
-    val p = t("part").filter(col("p_brand") === "Brand#3" && col("p_size") === 5)
-    val l = t("lineitem")
-    val avgQty = l.groupBy(col("l_partkey").as("aq_partkey"))
-      .agg((lit(0.2) * avg(col("l_quantity"))).as("qty_threshold"))
-    val naive = l.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .join(avgQty, col("l_partkey") === col("aq_partkey"))
-      .filter(col("l_quantity") < col("qty_threshold"))
-      .agg((asDouble(sum(dec(col("l_extendedprice")))) / lit(7.0)).as("avg_yearly"))
     val reduced = TpchFullQueries.q17SmallQuantity.run(spark, sf)
-    assertSameRows("q17", reduced, naive)
+    assertSameRows("q17", reduced, naive(TpchFullQueries.q17SmallQuantity))
   }
 
   test("q21: single-pass per-order stats match the EXISTS/NOT-EXISTS join pair") {
-    val n = t("nation").filter(col("n_name") === "NATION_3")
-    val sup = t("supplier")
-      .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-      .select("s_suppkey", "s_name")
-    val o = t("orders").filter(col("o_orderstatus") === "F")
-      .select("o_orderkey", "o_orderdate")
-    val late = col("l_shipdate") >= col("o_orderdate") + expr("INTERVAL 60 DAYS")
-    val l1 = t("lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
-      .join(o, col("l_orderkey") === col("o_orderkey"))
-      .filter(late)
-      .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-    val l2 = t("lineitem")
-      .select(col("l_orderkey").as("l2_orderkey"), col("l_suppkey").as("l2_suppkey"))
-    val l3 = t("lineitem")
-      .select(col("l_orderkey").as("l3_orderkey"), col("l_suppkey").as("l3_suppkey"),
-        col("l_shipdate").as("l3_shipdate"))
-    val naive = l1.join(l2, col("l_orderkey") === col("l2_orderkey")
-        && col("l2_suppkey") =!= col("l_suppkey"), "left_semi")
-      .join(l3, col("l_orderkey") === col("l3_orderkey")
-        && col("l3_suppkey") =!= col("l_suppkey")
-        && col("l3_shipdate") >= col("o_orderdate") + expr("INTERVAL 60 DAYS"), "left_anti")
-      .groupBy("s_name")
-      .agg(count(lit(1)).as("numwait"))
-      .orderBy(col("numwait").desc, col("s_name"))
     val reduced = TpchFullQueries.q21WaitingSuppliers.run(spark, sf)
     assert(reduced.count() > 0, "q21 must be non-vacuous at sf0.001")
-    assertSameRows("q21", reduced, naive)
+    assertSameRows("q21", reduced, naive(TpchFullQueries.q21WaitingSuppliers))
   }
 }
